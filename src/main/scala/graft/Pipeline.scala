@@ -224,21 +224,17 @@ object Pipeline {
     // uncoalesced — measured at sf0.1: q132 6.81→4.84 s, q126
     // 4.78→3.61, q140 4.49→3.68 (min-of-3 paired). Scale-neutral in
     // the other direction: AQE sizes the cached plan's partitioning
-    // from the data, so large frames keep their width. Restored
-    // after construction (consumers planned under the default treat
-    // the cached output partitioning conservatively — correct either
+    // from the data, so large frames keep their width. Scoped to
+    // construction (consumers planned under the default treat the
+    // cached output partitioning conservatively — correct either
     // way); an explicitly user-set value wins and is left alone.
     val cacheAqeKey =
       "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning"
-    val cacheAqeUserSet = spark.sessionState.conf.contains(cacheAqeKey)
-    if (!cacheAqeUserSet) spark.conf.set(cacheAqeKey, "true")
-    try runPhased0(spark, configText, args, context, executeSinks,
-      sinksStarted)
-    // unset, not set-back-to-prior: a set() would mark the key as
-    // explicitly configured, so every LATER run would read it as
-    // user-set and skip the scope (and nested runs re-scope
-    // idempotently either way)
-    finally if (!cacheAqeUserSet) spark.conf.unset(cacheAqeKey)
+    val scope: Map[String, String] =
+      if (spark.sessionState.conf.contains(cacheAqeKey)) Map.empty
+      else Map(cacheAqeKey -> "true")
+    graft.ops.SessionConf.scoped(spark, scope)(runPhased0(spark,
+      configText, args, context, executeSinks, sinksStarted))
   }
 
   private def runPhased0(spark: SparkSession, configText: String,
@@ -484,13 +480,18 @@ object Pipeline {
         failureCfgs.foreach(fc =>
           runFailureSink(spark, fc, env, forceAppend = true))
       }
-    val q = failures.writeStream
-      .outputMode("append")
-      .option("checkpointLocation",
-        graft.ops.FsUtil.scratchDir(
-          s"graft-failures-$moduleName-").toString)
-      .foreachBatch(drain)
-      .start()
+    // the failures frame shares the module's plan, so it starts with
+    // the same carried confs (state-store partitions) as its sink
+    val q = graft.ops.SessionConf.scoped(spark,
+        graft.ops.SessionConf.carried(failures)) {
+      failures.writeStream
+        .outputMode("append")
+        .option("checkpointLocation",
+          graft.ops.FsUtil.scratchDir(
+            s"graft-failures-$moduleName-").toString)
+        .foreachBatch(drain)
+        .start()
+    }
     graft.streaming.StreamRunner.register(q)
   }
 

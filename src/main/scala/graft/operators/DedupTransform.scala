@@ -80,22 +80,59 @@ object DedupTransform {
         "reference corpus. Use method: decontaminate for " +
         "stream-against-static matching, or dedup against the " +
         "reference in a batch stage")
-    // pre-validate the streaming contract BEFORE any scoped session
-    // conf mutates: scopeConf's only restore path is stopAll, which
-    // a failed build never reaches — mutating first would leak the
-    // override into the session when a later check throws. The
-    // validated (strategy, ts) pair is passed down so the contract
-    // (and its unknown-key warning) runs exactly once per build
-    var streamContract: Option[
-      (com.fasterxml.jackson.databind.JsonNode, String)] = None
+    // state-store partition count for THIS job (shared semantics
+    // with the stream-stream join's knob): streaming dedup keeps one
+    // state store per shuffle partition, and the right count follows
+    // the job's fingerprint/bucket cardinality, not the session.
+    // Carried on the output plan and scoped around the query's start
+    // (SessionConf.carry); Spark bakes the count into the checkpoint
+    // at first start.
+    val stateConf =
+      if (!raw.isStreaming) Map.empty[String, String]
+      else p.int("stateShufflePartitions").map { n =>
+        require(n > 0,
+          s"dedup ${cfg.name}: stateShufflePartitions must be " +
+            s"positive, got $n")
+        "spark.sql.shuffle.partitions" -> n.toString
+      }.toMap
+    def finish(out: DataFrame): Map[String, DataFrame] =
+      TransformCommon.finishRouted(
+        graft.ops.SessionConf.carry(out, stateConf), cfg)
     if (raw.isStreaming) method match {
       case "exact" =>
-        require(cfg.node("strategy")
-            .exists(_.str("timestampField").isDefined),
-          "streaming exact dedup needs strategy.timestampField (and " +
-            "allowedLateness) to bound its state: without an " +
-            "event-time horizon the seen-fingerprint state grows " +
-            "with the whole stream")
+        val strategy = cfg.node("strategy").getOrElse(
+          graft.config.Json.obj())
+        val ts = strategy.str("timestampField").getOrElse(
+          throw new IllegalArgumentException(
+            "streaming exact dedup needs strategy.timestampField (and " +
+              "allowedLateness) to bound its state: without an " +
+              "event-time horizon the seen-fingerprint state grows " +
+              "with the whole stream"))
+        graft.streaming.Strategy.warnUnknownKeys(strategy, cfg.name)
+        val textField = p.str("field").getOrElse("text")
+        val wm = graft.streaming.Strategy.applyWatermark(raw, strategy, ts)
+        return finish(wm.withColumn("__fp", fingerprint(col(textField)))
+          .dropDuplicatesWithinWatermark("__fp")
+          .drop("__fp"))
+      // streaming NEAR-dedup: minhash/simhash LSH with watermark-
+      // bounded bucket state — the 100 TB ingest shape (flag near-dups
+      // against everything seen within the horizon without re-scanning
+      // the corpus). Emits per-BAND candidate rows; see streamingLsh.
+      case "minhash" | "simhash" =>
+        return finish(streamingLsh(raw, cfg, method,
+          streamingDedupContract(cfg, method)))
+      // streaming embedding near-dedup: hyperplane bucket owner state
+      // + cosine verify at arrival; see streamingEmbedding
+      case "embedding" =>
+        return finish(streamingEmbedding(raw, cfg,
+          streamingDedupContract(cfg, method)))
+      // streaming ngram near-dedup: char-gram banding + exact Jaccard
+      // verify against the owner's text; see streamingNgram
+      case "ngram" =>
+        return finish(streamingNgram(raw, cfg,
+          streamingDedupContract(cfg, method)))
+      // streaming winnow near-dedup: fingerprint-bucket owner state +
+      // fingerprint-set Jaccard verify at arrival; see streamingWinnow
       case "winnow" =>
         // the fingerprint-INDEX action compares nothing — it is a
         // corpus materialization and needs the bounded batch path
@@ -103,10 +140,10 @@ object DedupTransform {
           s"dedup ${cfg.name}: winnow action: index requires a " +
             "bounded (batch) input — materialize the index in a " +
             "batch stage; the streaming form emits candidate rows")
-        streamContract = Some(streamingDedupContract(cfg, method))
-      case "minhash" | "simhash" | "embedding" | "ngram" =>
-        streamContract = Some(streamingDedupContract(cfg, method))
-      case "decontaminate" => () // stream-against-static, stateless
+        return finish(streamingWinnow(raw, cfg,
+          streamingDedupContract(cfg, method)))
+      // stream-against-static, stateless: the shared path below
+      case "decontaminate" => ()
       case other =>
         throw new IllegalArgumentException(
           s"dedup method '$other' requires a bounded (batch) input: " +
@@ -121,57 +158,6 @@ object DedupTransform {
             "window the stream upstream and dedup each window's batch " +
             "output.")
     }
-    // state-store partition count for THIS job (shared semantics
-    // with the stream-stream join's knob): streaming dedup keeps one
-    // state store per shuffle partition, and the right count follows
-    // the job's fingerprint/bucket cardinality, not the session.
-    // Scoped via StreamRunner, restored on stopAll; Spark bakes the
-    // count into the checkpoint at first start.
-    if (raw.isStreaming)
-      p.int("stateShufflePartitions").foreach { n =>
-        require(n > 0,
-          s"dedup ${cfg.name}: stateShufflePartitions must be " +
-            s"positive, got $n")
-        graft.streaming.StreamRunner.scopeConf(raw.sparkSession,
-          "spark.sql.shuffle.partitions", n.toString)
-      }
-    if (raw.isStreaming && method == "exact") {
-      val strategy = cfg.node("strategy").getOrElse(
-        graft.config.Json.obj())
-      graft.streaming.Strategy.warnUnknownKeys(strategy, cfg.name)
-      // presence guaranteed by the pre-validation require above
-      val ts = strategy.str("timestampField").get
-      val textField = p.str("field").getOrElse("text")
-      val wm = graft.streaming.Strategy.applyWatermark(raw, strategy, ts)
-      val out = wm.withColumn("__fp", fingerprint(col(textField)))
-        .dropDuplicatesWithinWatermark("__fp")
-        .drop("__fp")
-      return TransformCommon.finishRouted(out, cfg)
-    }
-    // streaming NEAR-dedup: minhash/simhash LSH with watermark-bounded
-    // bucket state — the 100 TB ingest shape (flag near-dups against
-    // everything seen within the horizon without re-scanning the
-    // corpus). Emits per-BAND candidate rows; see streamingLsh.
-    if (raw.isStreaming && (method == "minhash" || method == "simhash"))
-      return TransformCommon.finishRouted(
-        streamingLsh(raw, cfg, method, streamContract.get), cfg)
-    // streaming embedding near-dedup: hyperplane bucket owner state
-    // + cosine verify at arrival; see streamingEmbedding
-    if (raw.isStreaming && method == "embedding")
-      return TransformCommon.finishRouted(
-        streamingEmbedding(raw, cfg, streamContract.get), cfg)
-    // streaming ngram near-dedup: char-gram banding + exact Jaccard
-    // verify against the owner's text; see streamingNgram
-    if (raw.isStreaming && method == "ngram")
-      return TransformCommon.finishRouted(
-        streamingNgram(raw, cfg, streamContract.get), cfg)
-    // streaming winnow near-dedup: fingerprint-bucket owner state +
-    // fingerprint-set Jaccard verify at arrival; see streamingWinnow
-    if (raw.isStreaming && method == "winnow")
-      return TransformCommon.finishRouted(
-        streamingWinnow(raw, cfg, streamContract.get), cfg)
-    // (non-streamable methods on a stream threw in the pre-validation
-    // match above, before any conf scoped)
     // cross-corpus mode: flag primary rows near-duplicating a
     // REFERENCE corpus (dedup a new crawl against the existing
     // training set) instead of self-dedup
@@ -361,7 +347,7 @@ object DedupTransform {
           action = action,
           broadcastLimit = p.int("broadcastThreshold").getOrElse(2000000),
           bloomFpp = p.dbl("bloomFpp").getOrElse(0.01))
-        return TransformCommon.finishRouted(out, cfg)
+        return finish(out)
       case "verdicts" =>
         // doc-level verdicts over DRAINED streaming near-dedup
         // candidate rows. Streaming minhash/simhash/ngram/embedding

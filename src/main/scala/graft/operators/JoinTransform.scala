@@ -288,16 +288,15 @@ object JoinTransform {
     // state volume, not of the session (a low-cardinality join on
     // 32+ partitions pays 32 store commits per batch for a handful
     // of keys — measured 5x on the q163 gate; a 100 TB deployment
-    // wants hundreds). Scoped via StreamRunner (restored on
-    // stopAll); Spark bakes the count into the checkpoint at the
-    // query's FIRST start — changing it later needs a fresh
-    // checkpoint, so it is validated loudly here.
-    p.int("stateShufflePartitions").foreach { n =>
+    // wants hundreds). Carried on the join's plan and scoped around
+    // the query's start (SessionConf.carry); Spark bakes the count
+    // into the checkpoint at the query's FIRST start — changing it
+    // later needs a fresh checkpoint, so it is validated loudly here.
+    val stateConf = p.int("stateShufflePartitions").map { n =>
       require(n > 0,
         s"$name: stateShufflePartitions must be positive, got $n")
-      graft.streaming.StreamRunner.scopeConf(l.sparkSession,
-        "spark.sql.shuffle.partitions", n.toString)
-    }
+      "spark.sql.shuffle.partitions" -> n.toString
+    }.toMap
     // event-time columns must be true timestamps for Spark's
     // time-interval state analysis; NTZ re-stamps as UTC wall-clock
     def tsCol(df: DataFrame, field: String): DataFrame = {
@@ -342,7 +341,7 @@ object JoinTransform {
       case "full" => "full_outer"
       case _ => "inner"
     }
-    if (!overlap) {
+    val joined = if (!overlap) {
       val leftOn = p.str("leftOn").getOrElse(
         throw new IllegalArgumentException(
           s"$name: leftOn (point mode) or leftStart/leftEnd " +
@@ -386,6 +385,7 @@ object JoinTransform {
         (rs <= col(leftEnd))).reduce(_ && _)
       lW.join(rW, cond, joinType)
     }
+    graft.ops.SessionConf.carry(joined, stateConf)
   }
 
   private def intervalJoin(cfg: ModuleCfg, p: com.fasterxml.jackson.databind.JsonNode,

@@ -112,7 +112,7 @@ object TransformCommon {
   /** Scoped planner settings for iterative checkpoint-truncated
     * loops (pagerank, componentMin): run `body` with AQE off and the
     * shuffle-partition count derived from `df`'s optimizer size
-    * estimate, restoring both confs after.
+    * estimate, both scoped through [[graft.ops.SessionConf.scoped]].
     *
     * Why AQE off: adaptive plans report UnknownPartitioning at the
     * per-round localCheckpoint boundary (measured r22 — the q109
@@ -134,24 +134,18 @@ object TransformCommon {
     * count. */
   def withLoopPlanning[A](df: DataFrame)(body: => A): A = {
     val sess = df.sparkSession
-    val aqeKey = "spark.sql.adaptive.enabled"
     val partKey = "spark.sql.shuffle.partitions"
-    val aqePrior = sess.conf.get(aqeKey)
-    val partPrior = sess.conf.get(partKey)
+    val sessionParts = BigInt(sess.conf.get(partKey).toInt)
     val perSplit = BigInt(sess.sessionState.conf.filesMaxPartitionBytes)
     val bytes = df.queryExecution.optimizedPlan.stats.sizeInBytes
     val sentinel = BigInt(sess.sessionState.conf.defaultSizeInBytes)
     val loopParts =
-      if (bytes >= sentinel) BigInt(partPrior.toInt)
+      if (bytes >= sentinel) sessionParts
       else ((bytes + perSplit - 1) / perSplit)
-        .min(BigInt(partPrior.toInt)).max(BigInt(1))
-    sess.conf.set(aqeKey, "false")
-    sess.conf.set(partKey, loopParts.toString)
-    try body
-    finally {
-      sess.conf.set(aqeKey, aqePrior)
-      sess.conf.set(partKey, partPrior)
-    }
+        .min(sessionParts).max(BigInt(1))
+    graft.ops.SessionConf.scoped(sess, Map(
+      "spark.sql.adaptive.enabled" -> "false",
+      partKey -> loopParts.toString))(body)
   }
 
   /** Raise map-side parallelism when a batch input arrives in fewer
@@ -162,10 +156,6 @@ object TransformCommon {
     * cores, and on streaming frames. */
   def widen(df: DataFrame): DataFrame = {
     if (df.isStreaming) return df
-    // `spark.graft.widen=false` skips the probe entirely for very
-    // large plans where even optimizing twice is noticeable
-    if (!df.sparkSession.conf.get("spark.graft.widen", "true").toBoolean)
-      return df
     val target = df.sparkSession.sparkContext.defaultParallelism
     // estimate split count from optimizer stats (file-listing size /
     // maxPartitionBytes) instead of df.rdd.getNumPartitions — the RDD

@@ -2,7 +2,7 @@ package graft.streaming
 
 import graft.Pipeline.ModuleCfg
 import graft.config.Json._
-import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
@@ -134,20 +134,34 @@ object StreamRunner {
     cfg.node("strategy").foreach(Strategy.warnUnknownKeys(_, cfg.name))
     val trig = strategy.flatMap(_.apply("trigger")).map(normalizeTrigger)
     val trigType = trig.flatMap(_.str("type")).getOrElse("")
-    if (trigType == "afterWatermark" &&
-      trig.exists(_.apply("earlyFiringTrigger").isDefined))
-      // accumulation mode picks the pane engine: discarding panes
-      // re-aggregate each micro-batch (exact Beam semantics, any
-      // aggregate type); the default/accumulating path runs the
-      // stateful update+append query pair
-      return if (strategy.exists(_.str("mode").contains("discarding")))
+    // accumulation mode picks the pane engine: discarding panes
+    // re-aggregate each micro-batch (exact Beam semantics, any
+    // aggregate type); the default/accumulating path runs the
+    // stateful update+append query pair
+    val early = trigType == "afterWatermark" &&
+      trig.exists(_.apply("earlyFiringTrigger").isDefined)
+    val discarding = strategy.exists(_.str("mode").contains("discarding"))
+    val exact = early && !discarding &&
+      strategy.exists(_.bool("exactPanes").getOrElse(false))
+    // a query captures session conf at start(), so its confs are set
+    // only around it: those its modules carry (state-store
+    // partitions) and, for exact panes, driver-side discovery for the
+    // element-store read — past 32 leaf dirs Spark runs a LISTING
+    // JOB per micro-batch, and the store holds (slices × open
+    // horizons) dirs, which compaction already lists on the driver
+    val confs = graft.ops.SessionConf.carried(df) ++
+      (if (exact) Map(
+        "spark.sql.sources.parallelPartitionDiscovery.threshold" -> "8192")
+       else Map.empty)
+    graft.ops.SessionConf.scoped(df.sparkSession, confs) {
+      if (early && discarding)
         startDiscardingEarly(cfg, df, trig.get, strategy.get)
-      else if (strategy.exists(_.bool("exactPanes").getOrElse(false)))
+      else if (exact)
         startAccumulatingExact(cfg, df, trig.get, strategy.get)
-      else startEarlyFiring(cfg, df, trig.get)
-    if (trigType == "afterPane")
-      return startAfterPane(cfg, df, trig.get)
-    startPlain(cfg, df, trig, strategy)
+      else if (early) startEarlyFiring(cfg, df, trig.get)
+      else if (trigType == "afterPane") startAfterPane(cfg, df, trig.get)
+      else startPlain(cfg, df, trig, strategy)
+    }
   }
 
   /** Beam `AfterWatermark.pastEndOfWindow().withEarlyFirings(
@@ -393,50 +407,6 @@ object StreamRunner {
   private val lastPaneBatch =
     new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
 
-  /** Session-conf overrides scoped to the running pipeline: each
-    * entry restores one key to its pre-set value; stopAll runs and
-    * clears them. */
-  private val confRestores = scala.collection.mutable.ListBuffer[() => Unit]()
-
-  /** Currently-scoped key → value, for conflict detection: every
-    * query of a pipeline starts AFTER every module builds, so two
-    * modules scoping the SAME key to DIFFERENT values cannot both
-    * get their value — the last write would silently win for every
-    * query's checkpoint. Cleared with confRestores. */
-  private val scopedValues =
-    scala.collection.mutable.Map[String, String]()
-
-  /** Set a session conf for the lifetime of the queries this
-    * pipeline starts; the prior value (or unset state) is restored
-    * by stopAll. Used by module builders that need a conf captured
-    * at query start (e.g. the stream-stream join's / streaming
-    * dedup's stateShufflePartitions) without leaking it
-    * session-wide. Scoping one key to two DIFFERENT values in one
-    * run fails loudly (queries start after all builds, so only the
-    * last value could ever take effect); re-scoping to the same
-    * value is a no-op. */
-  def scopeConf(sess: SparkSession, key: String, value: String): Unit = {
-    confRestores.synchronized {
-      scopedValues.get(key) match {
-        case Some(v) if v == value => return // idempotent re-scope
-        case Some(v) => throw new IllegalArgumentException(
-          s"conflicting per-job values for $key in one pipeline " +
-            s"($v vs $value): Spark captures the conf when each " +
-            "query STARTS — after every module has built — so only " +
-            "one value per pipeline can take effect. Run the " +
-            "modules in separate pipelines")
-        case None =>
-          val prior = sess.conf.getOption(key)
-          scopedValues(key) = value
-          confRestores += (() => prior match {
-            case Some(v) => sess.conf.set(key, v)
-            case None => sess.conf.unset(key)
-          })
-      }
-    }
-    sess.conf.set(key, value)
-  }
-
   /** Plan-level emptiness probe for foreachBatch micro-batches
     * (r22): a no-data batch (watermark-advance cleanup, restart
     * replay with nothing new) arrives as a scan of ZERO files, so
@@ -676,16 +646,6 @@ object StreamRunner {
     val storeDir = ckpt + "/acc-elements"
     val triggerStateDir = new java.io.File(ckpt + "/trigger-state")
     restoreTriggerState(cfg.name, triggerStateDir)
-    // the store read's partition discovery: past 32 leaf dirs Spark
-    // launches a distributed LISTING JOB per micro-batch, and the
-    // element store routinely holds (slices × open horizons) > 32
-    // dirs — but that count is bounded by the open-window horizon
-    // and the same listing already runs driver-side for compaction,
-    // so keep discovery on the driver. Scoped, not leaked: the prior
-    // session value is captured here and restored by stopAll, so a
-    // user-tuned threshold survives the exact-pane sink's lifetime.
-    scopeConf(df.sparkSession,
-      "spark.sql.sources.parallelPartitionDiscovery.threshold", "8192")
 
     def emitWithIndex(pane0: DataFrame, keyCols: Seq[String],
         batchId: Long): Unit = {
@@ -1348,14 +1308,5 @@ object StreamRunner {
   def stopAll(): Unit = {
     activeQueries.foreach(_.stop())
     active.clear()
-    confRestores.synchronized {
-      // REVERSE order: with same-key scopes (idempotent re-scopes
-      // aside) a forward replay would end on a later restorer's
-      // captured prior — a scoped value — instead of the original
-      confRestores.reverseIterator.foreach(r =>
-        try r() catch { case _: Throwable => () })
-      confRestores.clear()
-      scopedValues.clear()
-    }
   }
 }

@@ -401,17 +401,28 @@ class JoinSpec extends AnyFunSuite {
     assert(e4.getMessage.contains("must be a timestamp"),
       e4.getMessage)
     // stateShufflePartitions: per-JOB state-store partition count,
-    // scoped via StreamRunner (restored by stopAll), validated > 0
-    val key = "spark.sql.shuffle.partitions"
-    val before = spark.conf.get(key)
-    join(
+    // carried on the join's plan into the query's start (the session
+    // is untouched at build and after start), validated > 0
+    val before = spark.sessionState.conf.getAllConfs
+    val dir = stageSides()
+    def fileSide(side: String) = spark.readStream
+      .schema(spark.read.parquet(s"$dir/$side").schema)
+      .parquet(s"$dir/$side")
+    val j7 = join(
       """{"method":"interval","by":["u"],"leftOn":"ts",
          "rightStart":"s","rightEnd":"e","maxIntervalSpan":"2h",
          "leftWatermark":"10m","rightWatermark":"10m",
-         "stateShufflePartitions":7}""", sl, sr)
-    assert(spark.conf.get(key) == "7")
-    graft.streaming.StreamRunner.stopAll()
-    assert(spark.conf.get(key) == before)
+         "stateShufflePartitions":7}""", fileSide("l"), fileSide("r"))
+    assert(spark.sessionState.conf.getAllConfs == before)
+    try {
+      val q = graft.streaming.StreamRunner.start(
+        ModuleCfg("ssj_parts7", "memory", Seq("jn"), Nil,
+          graft.config.Json.parse("""{"outputMode":"append"}"""),
+          graft.config.Json.obj()), j7)
+      q.processAllAvailable()
+      assert(statePartitions(q) == Seq(7))
+      assert(spark.sessionState.conf.getAllConfs == before)
+    } finally graft.streaming.StreamRunner.stopAll()
     val e5 = intercept[IllegalArgumentException](join(
       """{"method":"interval","by":["u"],"leftOn":"ts",
          "rightStart":"s","rightEnd":"e","maxIntervalSpan":"2h",
@@ -420,6 +431,62 @@ class JoinSpec extends AnyFunSuite {
     assert(e5.getMessage.contains("stateShufflePartitions"),
       e5.getMessage)
   }
+
+  test("two interval-join pipelines on one session, no stopAll " +
+      "between, each start with their own stateShufflePartitions") {
+    // the Server /run shape: pipelines share the session and its
+    // queries stay up. 8 and 3 both differ from the test session's
+    // 4, so a query that missed its conf would show it.
+    def run(sink: String, n: Int) = {
+      val dir = stageSides()
+      Pipeline.execute(spark, s"""
+        |sources:
+        |  - {name: l, module: storage, parameters: {path: "$dir/l", stream: true}}
+        |  - {name: r, module: storage, parameters: {path: "$dir/r", stream: true}}
+        |transforms:
+        |  - name: jn
+        |    module: join
+        |    inputs: [l, r]
+        |    parameters: {method: interval, by: [u], leftOn: ts,
+        |      rightStart: s, rightEnd: e, maxIntervalSpan: 2h,
+        |      leftWatermark: 10m, rightWatermark: 10m,
+        |      stateShufflePartitions: $n}
+        |sinks:
+        |  - {name: $sink, module: memory, input: jn,
+        |     parameters: {outputMode: append}}
+        |""".stripMargin)
+      graft.streaming.StreamRunner.drainAll()
+      graft.streaming.StreamRunner.activeQueries.find(_.name == sink).get
+    }
+    try {
+      val q8 = run("ssj_parts8", 8)
+      val q3 = run("ssj_parts3", 3)
+      assert(q8.isActive && q3.isActive)
+      assert(statePartitions(q8) == Seq(8))
+      assert(statePartitions(q3) == Seq(3))
+      assert(spark.table("ssj_parts8").count() == 1)
+      assert(spark.table("ssj_parts3").count() == 1)
+    } finally graft.streaming.StreamRunner.stopAll()
+  }
+
+  /** One batch per side as parquet dirs `l` and `r` under a fresh
+    * temp dir: a point and an interval around it on the same key. */
+  private def stageSides(): String = {
+    val dir = java.nio.file.Files.createTempDirectory("graft-ssjoin")
+      .toString
+    Seq((1L, 1L, java.sql.Timestamp.valueOf("2024-01-01 00:30:00")))
+      .toDF("event_id", "u", "ts").write.parquet(s"$dir/l")
+    Seq((10L, 1L, java.sql.Timestamp.valueOf("2024-01-01 00:00:00"),
+        java.sql.Timestamp.valueOf("2024-01-01 01:00:00")))
+      .toDF("wid", "u", "s", "e").write.parquet(s"$dir/r")
+    dir
+  }
+
+  /** State-store partition count of each stateful operator in the
+    * query's last micro-batch. */
+  private def statePartitions(
+      q: org.apache.spark.sql.streaming.StreamingQuery): Seq[Int] =
+    q.lastProgress.stateOperators.toSeq.map(_.numShufflePartitions.toInt)
 
   test("reserved columns, bad method, and missing params fail " +
       "actionably") {

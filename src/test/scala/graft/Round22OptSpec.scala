@@ -6,11 +6,11 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** Pins the r22 optimization-round internals for the streaming
   * near-dedup paths: `stateShufflePartitions` (state stores sized to
-  * live-bucket volume, scoped per job and restored on stopAll) and
+  * live-bucket volume, carried to the query's start) and
   * `widenCompute` (pre-state signature compute repartitioned to
   * cluster parallelism) must change ONLY the physical shape — the
   * drained candidate multiset stays identical to the un-knobbed run,
-  * and the session's shuffle-partition conf is restored afterwards. */
+  * and the session's conf is never changed. */
 class Round22OptSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
   import spark.implicits._
@@ -40,6 +40,7 @@ class Round22OptSpec extends AnyFunSuite {
     val dir = java.nio.file.Files
       .createTempDirectory("graft-r22opt").toString
     stage(dir, "b1", docs.take(2))
+    val before = spark.sessionState.conf.getAllConfs
     Pipeline.execute(spark, s"""
       |sources:
       |  - name: d
@@ -58,6 +59,9 @@ class Round22OptSpec extends AnyFunSuite {
       |    input: dd
       |    parameters: {outputMode: append}
       |""".stripMargin)
+    assert(spark.sessionState.conf.getAllConfs == before,
+      "the session conf must be unchanged right after execute, " +
+        "while the query runs")
     StreamRunner.drainAll()
     stage(dir, "b2", docs.drop(2))
     StreamRunner.drainAll()
@@ -68,7 +72,7 @@ class Round22OptSpec extends AnyFunSuite {
   }
 
   test("stateShufflePartitions + widenCompute change shape, not " +
-      "values; the scoped conf restores on stopAll") {
+      "values; the session conf is unchanged right after execute") {
     val key = "spark.sql.shuffle.partitions"
     val prior = spark.conf.get(key)
     val plain = runNgram("")
@@ -77,7 +81,7 @@ class Round22OptSpec extends AnyFunSuite {
     assert(knobbed == plain,
       s"knobs must not change the candidate set: $knobbed vs $plain")
     assert(spark.conf.get(key) == prior,
-      "scoped shuffle-partition conf must restore after stopAll")
+      "the shuffle-partition conf must be unchanged after stopAll")
   }
 
   test("pipeline construction compiles operator caches adaptively " +

@@ -58,25 +58,34 @@ class StreamGuardSpec extends AnyFunSuite {
     assert(out("g").isStreaming)
   }
 
-  test("scopeConf: conflicting per-job values fail loudly; stopAll " +
-      "restores the ORIGINAL value under same-key re-scopes") {
-    val key = "spark.graft.test.scopedconf"
-    spark.conf.set(key, "orig")
-    graft.streaming.StreamRunner.scopeConf(spark, key, "a")
-    // idempotent re-scope (a second module asking for the same
-    // value, e.g. join + dedup both setting stateShufflePartitions)
-    graft.streaming.StreamRunner.scopeConf(spark, key, "a")
-    assert(spark.conf.get(key) == "a")
-    // two modules asking for DIFFERENT values cannot both win —
-    // queries start after all builds, so the last write would
-    // silently apply to every checkpoint
+  test("modules carrying different stateShufflePartitions into one " +
+      "sink fail loudly at start; equal values are one conf") {
+    def dedup(name: String, parts: Int) =
+      Pipeline.transforms("dedup")(spark,
+        Pipeline.ModuleCfg(name, "dedup", Seq("ev"), Nil,
+          graft.config.Json.parse(
+            s"""{"method": "exact", "stateShufflePartitions": $parts}"""),
+          graft.config.Json.parse("""{"strategy": {"timestampField":
+            "ts", "allowedLateness": 60}}""")),
+        Map("ev" -> rateSrc))(name)
+    val sink = Pipeline.ModuleCfg("guard_sink", "memory", Seq("u"), Nil,
+      graft.config.Json.parse("""{"outputMode": "append"}"""),
+      graft.config.Json.obj())
+    val before = spark.sessionState.conf.getAllConfs
+    // two modules asking for DIFFERENT values cannot both win — the
+    // query captures the conf once, at start
     val e = intercept[IllegalArgumentException](
-      graft.streaming.StreamRunner.scopeConf(spark, key, "b"))
+      graft.streaming.StreamRunner.start(sink,
+        dedup("a", 2).unionByName(dedup("b", 3))))
     assert(e.getMessage.contains("conflicting"), e.getMessage)
-    graft.streaming.StreamRunner.stopAll()
-    assert(spark.conf.get(key) == "orig",
-      "restore must return the pre-scope value, not a later " +
-        "restorer's captured intermediate")
-    spark.conf.unset(key)
+    assert(e.getMessage.contains("(2 vs 3)"), e.getMessage)
+    assert(!graft.streaming.StreamRunner.allQueries
+      .exists(_.name == "guard_sink"))
+    assert(spark.sessionState.conf.getAllConfs == before)
+    // a second module asking for the SAME value (e.g. join + dedup
+    // both setting stateShufflePartitions) is not a conflict
+    assert(graft.ops.SessionConf.carried(
+      dedup("c", 2).unionByName(dedup("d", 2))) ==
+      Map("spark.sql.shuffle.partitions" -> "2"))
   }
 }
